@@ -3732,8 +3732,9 @@ object SparkEntry {
             unix_timestamp(col("ts")).as("sec"), col("event_id"), col("value"))
         val snapDir = scratchDir("graft_upsnap_").toString
         val ckptDir = scratchDir("graft_upckpt_").toString
-        graft.streaming.StreamingOps.upsertSink(stream,
-          keys = Seq("user_id", "event_type"), orderCol = "sec", snapDir, ckptDir)
+        graft.streaming.StreamingOps.runGate(stream, ckptDir)(
+          graft.streaming.StreamingOps.applyUpsertBatch(_, _,
+            Seq("user_id", "event_type"), "sec", snapDir))
         graft.streaming.StreamingOps.readSnapshot(s, snapDir)
       }
     },
@@ -3780,8 +3781,9 @@ object SparkEntry {
         val stateDir = scratchDir("graft_dedup_idx_").toString
         val outDir = scratchDir("graft_dedup_out_").toString
         val ckpt = scratchDir("graft_dedup_ckpt_").toString
-        graft.streaming.StreamingOps.dedupGate(stream, stateDir, outDir, ckpt,
-          threshold = 0.8)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyDedupBatch(_, _, stateDir, outDir,
+            threshold = 0.8))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3801,8 +3803,8 @@ object SparkEntry {
         val stateDir = scratchDir("graft_sspan_gate_state_").toString
         val outDir = scratchDir("graft_sspan_gate_out_").toString
         val ckpt = scratchDir("graft_sspan_gate_ckpt_").toString
-        graft.streaming.StreamingOps.sentenceSpanGate(
-          stream, stateDir, outDir, ckpt, n = 3)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applySentenceSpanBatch(_, _, stateDir, outDir, n = 3))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3819,8 +3821,8 @@ object SparkEntry {
         val stateDir = scratchDir("graft_sprm_gate_state_").toString
         val outDir = scratchDir("graft_sprm_gate_out_").toString
         val ckpt = scratchDir("graft_sprm_gate_ckpt_").toString
-        graft.streaming.StreamingOps.spanRemoveGate(
-          stream, stateDir, outDir, ckpt, n = 3)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applySpanRemoveBatch(_, _, stateDir, outDir, n = 3))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3845,8 +3847,8 @@ object SparkEntry {
           .filter(bucket < 80)
         val outDir = scratchDir("graft_decontam_out_").toString
         val ckpt = scratchDir("graft_decontam_ckpt_").toString
-        graft.streaming.StreamingOps.decontamGate(stream, idxDir, outDir, ckpt,
-          n = 8)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyDecontamBatch(_, _, idxDir, outDir, n = 8))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3865,8 +3867,8 @@ object SparkEntry {
         val stateDir = scratchDir("graft_dhash_idx_").toString
         val outDir = scratchDir("graft_dhash_out_").toString
         val ckpt = scratchDir("graft_dhash_ckpt_").toString
-        graft.streaming.StreamingOps.dhashGate(stream, stateDir, outDir, ckpt,
-          maxDist = 3)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyDhashBatch(_, _, stateDir, outDir, maxDist = 3))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3886,8 +3888,8 @@ object SparkEntry {
           .withColumn("len", length(col("text")))
         val stateDir = scratchDir("graft_golden_state_").toString
         val ckpt = scratchDir("graft_golden_ckpt_").toString
-        graft.streaming.StreamingOps.survivorshipSink(stream, stateDir, ckpt,
-          keyCol = "lang", rules)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applySurvivorshipBatch(_, _, stateDir, "lang", rules))
         graft.streaming.StreamingOps.readGoldenRecords(s, stateDir, rules)
       }
     },
@@ -3906,7 +3908,8 @@ object SparkEntry {
         val stateDir = scratchDir("graft_lm_state_").toString
         val outDir = scratchDir("graft_lm_out_").toString
         val ckpt = scratchDir("graft_lm_ckpt_").toString
-        graft.streaming.StreamingOps.lmGate(stream, stateDir, outDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyLmBatch(_, _, stateDir, outDir))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3925,7 +3928,8 @@ object SparkEntry {
         val stateDir = scratchDir("graft_nbcls_state_").toString
         val outDir = scratchDir("graft_nbcls_out_").toString
         val ckpt = scratchDir("graft_nbcls_ckpt_").toString
-        graft.streaming.StreamingOps.classifierGate(stream, stateDir, outDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyClassifierBatch(_, _, stateDir, outDir))
         s.read.parquet(s"$outDir/b*")
       }
     },
@@ -3934,7 +3938,7 @@ object SparkEntry {
         // Snapshot time travel + retention over the upsert sink's
         // versioned snapshots: the stream_upsert_snapshot scenario
         // commits v0..v2 (one per replay tile), then readSnapshotAt(1)
-        // serves the table AS OF the second batch, vacuumSnapshots
+        // serves the table AS OF the second batch, vacuumVersions
         // (keepLast = 2) deletes only v0, and the v1 read is re-served
         // AFTER the vacuum — committed version dirs are immutable, so
         // retention cannot disturb a retained historical read. Oracle =
@@ -3947,12 +3951,13 @@ object SparkEntry {
             unix_timestamp(col("ts")).as("sec"), col("event_id"), col("value"))
         val snapDir = scratchDir("graft_ttsnap_").toString
         val ckptDir = scratchDir("graft_ttckpt_").toString
-        graft.streaming.StreamingOps.upsertSink(stream,
-          keys = Seq("user_id", "event_type"), orderCol = "sec", snapDir, ckptDir)
+        graft.streaming.StreamingOps.runGate(stream, ckptDir)(
+          graft.streaming.StreamingOps.applyUpsertBatch(_, _,
+            Seq("user_id", "event_type"), "sec", snapDir))
         val committed = graft.streaming.StreamingOps.listSnapshotVersions(snapDir)
         require(committed == Seq(0L, 1L, 2L),
           s"expected versions 0..2 under $snapDir, got $committed")
-        val removed = graft.streaming.StreamingOps.vacuumSnapshots(snapDir, keepLast = 2)
+        val removed = graft.streaming.StreamingOps.vacuumVersions(snapDir, keepLast = 2)
         require(removed == Seq(0L), s"vacuum(keepLast=2) must drop v0 only, got $removed")
         val retained = graft.streaming.StreamingOps.listSnapshotVersions(snapDir)
         require(retained == Seq(1L, 2L),
@@ -4331,21 +4336,16 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_totalprice"))
         val replayDir = scratchDir("graft_drift_replay_").toFile
         Seq(0L, 3L, 6L).zipWithIndex.foreach { case (g, i) =>
-          val stage = scratchDir("graft_drift_stage_")
-          cur.filter(pmod(col("o_orderkey"), lit(9L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cur_$i%02d.parquet").toPath)
+          stageSingleFile(cur.filter(pmod(col("o_orderkey"), lit(9L)) === g),
+            new java.io.File(replayDir, f"cur_$i%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_drift_state_").toString
         val ckpt = scratchDir("graft_drift_ckpt_").toString
         val stream = s.readStream.schema(cur.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.driftGate(stream, "o_totalprice",
-          mn, width, bins, stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyDriftBatch(_, _, "o_totalprice",
+            mn, width, bins, stateDir))
         graft.streaming.StreamingOps.driftGateResult(s, refHist, stateDir, bins)
       }
     },
@@ -4364,21 +4364,15 @@ object SparkEntry {
           .select(expr("doc_id div 2").as("pair_id"), col("text"))
         val replayDir = scratchDir("graft_cer_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_cer_stage_")
-          cand.filter(pmod(col("pair_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cand_$g%02d.parquet").toPath)
+          stageSingleFile(cand.filter(pmod(col("pair_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"cand_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_cer_state_").toString
         val ckpt = scratchDir("graft_cer_ckpt_").toString
         val stream = s.readStream.schema(cand.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.cerGate(stream, ref, "pair_id",
-          "text", stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyCerBatch(_, _, ref, "pair_id", "text", stateDir))
         graft.streaming.StreamingOps.cerGateResult(s, stateDir)
       }
     },
@@ -4398,21 +4392,15 @@ object SparkEntry {
           .select(expr("doc_id div 2").as("pair_id"), col("text"))
         val replayDir = scratchDir("graft_bleu_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_bleu_stage_")
-          cand.filter(pmod(col("pair_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"cand_$g%02d.parquet").toPath)
+          stageSingleFile(cand.filter(pmod(col("pair_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"cand_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_bleu_state_").toString
         val ckpt = scratchDir("graft_bleu_ckpt_").toString
         val stream = s.readStream.schema(cand.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.bleuGate(stream, ref, "pair_id",
-          "text", stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyBleuBatch(_, _, ref, "pair_id", "text", stateDir))
         graft.streaming.StreamingOps.bleuGateResult(s, stateDir)
       }
     },
@@ -4428,21 +4416,16 @@ object SparkEntry {
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderstatus"))
         val replayDir = scratchDir("graft_assoc_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_assoc_stage_")
-          orders.filter(pmod(col("o_orderkey"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(orders.filter(pmod(col("o_orderkey"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_assoc_state_").toString
         val ckpt = scratchDir("graft_assoc_ckpt_").toString
         val stream = s.readStream.schema(orders.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.associationGate(stream,
-          "o_orderpriority", "o_orderstatus", stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyAssociationBatch(_, _,
+            "o_orderpriority", "o_orderstatus", stateDir))
         graft.streaming.StreamingOps.associationGateResult(s, stateDir)
       }
     },
@@ -4464,21 +4447,15 @@ object SparkEntry {
           graft.ext.Similarity.ivfCentroidState(emb, nCells = 8), centroidDir)
         val replayDir = scratchDir("graft_ivfg_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_ivfg_stage_")
-          emb.filter(pmod(col("vec_id"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(emb.filter(pmod(col("vec_id"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_ivfg_state_").toString
         val ckpt = scratchDir("graft_ivfg_ckpt_").toString
         val stream = s.readStream.schema(emb.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.ivfIngestGate(stream, centroidDir,
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyIvfIngestBatch(_, _, centroidDir, stateDir))
         graft.streaming.StreamingOps.ivfSearchFromIngest(s, stateDir,
           centroidDir, emb.filter(col("vec_id") < 20), k = 10, nProbe = 8)
       }
@@ -4544,21 +4521,15 @@ object SparkEntry {
         val calib = sc.filter(pmod(col("o_orderkey"), lit(3L)) === 0)
         val replayDir = scratchDir("graft_cqr_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_cqr_stage_")
-          calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_cqr_state_").toString
         val ckpt = scratchDir("graft_cqr_ckpt_").toString
         val stream = s.readStream.schema(calib.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.cqrGate(stream, "lo", "hi", "actual",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyCqrBatch(_, _, "lo", "hi", "actual", stateDir))
         graft.streaming.StreamingOps.cqrGateResult(s, stateDir,
           sc.filter(pmod(col("o_orderkey"), lit(3L)) === 1),
           "lo", "hi", alphaMicro = 100000L, idCol = "o_orderkey")
@@ -4576,21 +4547,15 @@ object SparkEntry {
         val live = o.filter(pmod(col("o_orderkey"), lit(3L)) === 1)
         val replayDir = scratchDir("graft_mw_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_mw_stage_")
-          live.filter(pmod(col("o_orderkey"), lit(9L)) === 3L * g + 1L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(live.filter(pmod(col("o_orderkey"), lit(9L)) === 3L * g + 1L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_mw_state_").toString
         val ckpt = scratchDir("graft_mw_ckpt_").toString
         val stream = s.readStream.schema(live.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.mwGate(stream, "o_totalprice",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyMwBatch(_, _, "o_totalprice", stateDir))
         graft.streaming.StreamingOps.mwGateResult(s, stateDir,
           graft.ops.Experiment.mwMicroHistogram(
             o.filter(pmod(col("o_orderkey"), lit(3L)) === 0), "o_totalprice"))
@@ -4611,21 +4576,15 @@ object SparkEntry {
         val calib = scored.filter(pmod(col("o_orderkey"), lit(3L)) === 0)
         val replayDir = scratchDir("graft_conf_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_conf_stage_")
-          calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(calib.filter(pmod(col("o_orderkey"), lit(9L)) === g * 3L),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_conf_state_").toString
         val ckpt = scratchDir("graft_conf_ckpt_").toString
         val stream = s.readStream.schema(calib.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.conformalGate(stream, "pred", "actual",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyConformalBatch(_, _, "pred", "actual", stateDir))
         graft.streaming.StreamingOps.conformalGateResult(s, stateDir,
           scored.filter(pmod(col("o_orderkey"), lit(3L)) === 1),
           "pred", alphaMicro = 100000L, idCol = "o_orderkey")
@@ -4644,21 +4603,16 @@ object SparkEntry {
           expr("CAST(unix_timestamp(o_orderdate) AS BIGINT) div 604800").as("order_week"))
         val replayDir = scratchDir("graft_tclg_replay_").toFile
         parForeach(0 until 3) { g =>
-          val stage = scratchDir("graft_tclg_stage_")
-          orders.filter(pmod(col("o_orderkey"), lit(3L)) === g)
-            .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$g%02d.parquet").toPath)
+          stageSingleFile(orders.filter(pmod(col("o_orderkey"), lit(3L)) === g),
+            new java.io.File(replayDir, f"tile_$g%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_tclg_state_").toString
         val ckpt = scratchDir("graft_tclg_ckpt_").toString
         val stream = s.readStream.schema(orders.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.tClosenessGate(stream,
-          Seq("o_orderpriority", "order_week"), "o_orderstatus", stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyTClosenessBatch(_, _,
+            Seq("o_orderpriority", "order_week"), "o_orderstatus", stateDir))
         graft.streaming.StreamingOps.tClosenessGateResult(s, stateDir,
           Seq("o_orderpriority", "order_week"), tNano = 150000000L)
       }
@@ -4683,20 +4637,16 @@ object SparkEntry {
         val tiles = Seq(sec < cut1, sec >= cut1 && sec < cut2, sec >= cut2)
         val replayDir = scratchDir("graft_twap_replay_").toFile
         tiles.zipWithIndex.foreach { case (p, i) =>
-          val stage = scratchDir("graft_twap_stage_")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$i%02d.parquet").toPath)
+          stageSingleFile(ev.filter(p),
+            new java.io.File(replayDir, f"tile_$i%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_twap_state_").toString
         val ckpt = scratchDir("graft_twap_ckpt_").toString
         val stream = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.twapGate(stream, "event_type", "ts",
-          "event_id", "value", stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyTwapBatch(_, _, "event_type", "ts",
+            "event_id", "value", stateDir))
         graft.streaming.StreamingOps.twapGateResult(s, stateDir)
       }
     },
@@ -4717,20 +4667,15 @@ object SparkEntry {
         val tiles = Seq(sec < cut1, sec >= cut1 && sec < cut2, sec >= cut2)
         val replayDir = scratchDir("graft_cov_replay_").toFile
         tiles.zipWithIndex.foreach { case (p, i) =>
-          val stage = scratchDir("graft_cov_stage_")
-          ev.filter(p).coalesce(1).write.mode("overwrite").parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no part file under $stage"))
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(replayDir, f"tile_$i%02d.parquet").toPath)
+          stageSingleFile(ev.filter(p),
+            new java.io.File(replayDir, f"tile_$i%02d.parquet"), None)
         }
         val stateDir = scratchDir("graft_cov_state_").toString
         val ckpt = scratchDir("graft_cov_ckpt_").toString
         val stream = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1").parquet(replayDir.toString)
-        graft.streaming.StreamingOps.coverageGate(stream, "user_id",
-          lenSec = 300L, stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyCoverageBatch(_, _, "user_id", 300L, stateDir))
         graft.streaming.StreamingOps.coverageGateResult(s, stateDir)
           .withColumnRenamed("key", "user_id")
       }
@@ -4751,8 +4696,8 @@ object SparkEntry {
           .select(col("event_type"), unix_timestamp(col("ts")).as("sec"))
         val stateDir = scratchDir("graft_anomaly_state_").toString
         val ckpt = scratchDir("graft_anomaly_ckpt_").toString
-        graft.streaming.StreamingOps.anomalyGate(stream, "sec", "event_type",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyAnomalyBatch(_, _, "sec", "event_type", stateDir))
         graft.streaming.StreamingOps.anomalyGateResult(s, stateDir,
           "event_type", factorNum = 3L, factorDen = 2L)
       }
@@ -4772,8 +4717,8 @@ object SparkEntry {
           .select(col("event_type"), unix_timestamp(col("ts")).as("sec"))
         val stateDir = scratchDir("graft_cusum_state_").toString
         val ckpt = scratchDir("graft_cusum_ckpt_").toString
-        graft.streaming.StreamingOps.cusumGate(stream, "sec", "event_type",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyCusumBatch(_, _, "sec", "event_type", stateDir))
         graft.streaming.StreamingOps.cusumGateResult(s, stateDir,
           "event_type", kNum = 1L, kDen = 100L, hNum = 3L, hDen = 10L)
       }
@@ -4790,8 +4735,8 @@ object SparkEntry {
           .select(col("event_type"), unix_timestamp(col("ts")).as("sec"))
         val stateDir = scratchDir("graft_holt_state_").toString
         val ckpt = scratchDir("graft_holt_ckpt_").toString
-        graft.streaming.StreamingOps.cusumGate(stream, "sec", "event_type",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyCusumBatch(_, _, "sec", "event_type", stateDir))
         graft.streaming.StreamingOps.holtGateResult(s, stateDir,
           "event_type", alphaMicro = 300000L, betaMicro = 100000L)
       }
@@ -4851,8 +4796,8 @@ object SparkEntry {
           .option("maxFilesPerTrigger", "1").parquet(replayDir)
         val stateDir = scratchDir("graft_quality_state_").toString
         val ckpt = scratchDir("graft_quality_ckpt_").toString
-        graft.streaming.StreamingOps.qualityGate(stream, "text", "lang",
-          stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyQualityBatch(_, _, "text", "lang", stateDir))
         graft.streaming.StreamingOps.qualityGateResult(s, stateDir, "lang")
       }
     },
@@ -5574,8 +5519,9 @@ object SparkEntry {
             pmod(col("event_id") * lit(69069L), lit(100000L)).as("lon_u"))
         val stateDir = scratchDir("graft_dbscan_state_").toString
         val ckpt = scratchDir("graft_dbscan_ckpt_").toString
-        graft.streaming.StreamingOps.hotspotGate(stream, "lat_u", "lon_u",
-          cellMicro = 5000L, stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyHotspotBatch(_, _, "lat_u", "lon_u",
+            5000L, stateDir))
         graft.ops.Geo.dbscanFromCells(
           graft.streaming.StreamingOps.readSnapshot(s, stateDir), minPts = 25L)
       }
@@ -5654,8 +5600,9 @@ object SparkEntry {
             pmod(col("event_id") * lit(69069L), lit(100000L)).as("lon_u"))
         val stateDir = scratchDir("graft_hotspot_state_").toString
         val ckpt = scratchDir("graft_hotspot_ckpt_").toString
-        graft.streaming.StreamingOps.hotspotGate(stream, "lat_u", "lon_u",
-          cellMicro = 5000L, stateDir, ckpt)
+        graft.streaming.StreamingOps.runGate(stream, ckpt)(
+          graft.streaming.StreamingOps.applyHotspotBatch(_, _, "lat_u", "lon_u",
+            5000L, stateDir))
         graft.streaming.StreamingOps.hotspotGateResult(s, stateDir,
           factorNum = 3L, factorDen = 2L)
       }
@@ -5934,6 +5881,23 @@ object SparkEntry {
       .select(frame.columns.map(col).toIndexedSeq :+ col("__tile"): _*)
   }
 
+  /** Write `df` as the ONE parquet file `dest` (through a scratch stage
+    * dir), then pin its mtime when given — the file stream source orders
+    * its backlog by modification time. Fails loud unless the write left
+    * exactly one part file: moving only the first would silently drop
+    * the rows of the others (e.g. under a session maxRecordsPerFile). */
+  private def stageSingleFile(df: DataFrame, dest: java.io.File,
+      mtime: Option[Long]): Unit = {
+    val stage = scratchDir("graft_stage_")
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val parts = stage.toFile.listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    require(parts.length == 1,
+      s"expected exactly one part file under $stage, got ${parts.length}")
+    java.nio.file.Files.move(parts.head.toPath, dest.toPath)
+    mtime.foreach(t => require(dest.setLastModified(t), s"cannot set mtime on $dest"))
+  }
+
   /** Stage the events fixture as `parts` single-file parquet writes in a
     * fresh directory, one file per NTILE-by-(ts, event_id) tile, replayed
     * in `order` (tile indices; defaults to time order 1..parts). The file
@@ -5963,15 +5927,9 @@ object SparkEntry {
     // replay sequence the mtimes pin is identical under concurrent
     // writes; wall cost is the max tile, not the sum (guide §2.6)
     parWrite(replayOrder.zipWithIndex.map { case (tile, pos) => () => {
-      val stage = scratchDir("graft_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
-      val dest = new java.io.File(replay.toFile, f"events_$pos%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      require(dest.setLastModified(base + (pos + 1) * 60000L), s"cannot set mtime on $dest")
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"),
+        new java.io.File(replay.toFile, f"events_$pos%02d.parquet"),
+        Some(base + (pos + 1) * 60000L))
     }}: _*)
     (replay.toString, ev.schema)
   }
@@ -5992,16 +5950,10 @@ object SparkEntry {
         case _ => lit(-1L)
       }).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-    val stage = scratchDir("graft_stage_hb_")
-    hb.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = stage.toFile.listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no part file written under $stage"))
-    val dest = new java.io.File(replayDir, f"events_$pos%02d.parquet")
-    java.nio.file.Files.move(part.toPath, dest.toPath)
     // strictly after every tile's mtime (tiles end at now - 60s)
-    require(dest.setLastModified(System.currentTimeMillis()),
-      s"cannot set mtime on $dest")
+    stageSingleFile(hb,
+      new java.io.File(replayDir, f"events_$pos%02d.parquet"),
+      Some(System.currentTimeMillis()))
   }
 
   /** Stages orders as ONE parquet file per order-year
@@ -6095,15 +6047,9 @@ object SparkEntry {
     // tile index, so the pinned replay order is unchanged (see
     // timeOrderedEventReplay)
     parForeach(1 to parts) { tile =>
-      val stage = scratchDir("graft_frame_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
-      val dest = new java.io.File(replay.toFile, f"tile_$tile%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      require(dest.setLastModified(base + tile * 60000L), s"cannot set mtime on $dest")
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"),
+        new java.io.File(replay.toFile, f"tile_$tile%02d.parquet"),
+        Some(base + tile * 60000L))
     }
     (replay.toString, frame.schema)
   }
@@ -6119,15 +6065,9 @@ object SparkEntry {
     // concurrent independent tile writes; mtimes are functions of the
     // tile index (see timeOrderedEventReplay)
     parForeach(1 to parts) { tile =>
-      val stage = scratchDir("graft_doc_stage_")
-      tiled.filter(col("__tile") === tile).drop("__tile")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $stage"))
-      val dest = new java.io.File(replay.toFile, f"docs_$tile%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      require(dest.setLastModified(base + tile * 60000L), s"cannot set mtime on $dest")
+      stageSingleFile(tiled.filter(col("__tile") === tile).drop("__tile"),
+        new java.io.File(replay.toFile, f"docs_$tile%02d.parquet"),
+        Some(base + tile * 60000L))
     }
     (replay.toString, d.schema)
   }

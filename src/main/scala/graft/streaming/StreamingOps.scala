@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 
 /** Structured Streaming faces of the event analytics in graft.ext.Events:
   * same column expressions, incremental execution. Watermarks bound state;
@@ -609,8 +610,6 @@ object StreamingOps {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Convenience sink for tests/demos: run a streaming frame to a named
-    * in-memory table until all available input is processed. */
   /** Watermarked stream-stream INNER interval join: each left event
     * matches right events of the same key whose timestamp falls in
     * [left.ts - lookback, left.ts] — the attribution join (click <-
@@ -663,9 +662,22 @@ object StreamingOps {
       keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys)
 
+
+  /** Convenience sink for tests/demos: run a streaming frame to a named
+    * in-memory table until all available input is processed. */
   def runToMemory(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
     val q = df.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
     try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Drain all currently-available input through `writer` under
+    * `checkpointDir` with the AvailableNow trigger, then stop — the
+    * shared tail of [[runToParquet]] and [[runGate]]. */
+  private def drain(writer: DataStreamWriter[Row], checkpointDir: String): Unit = {
+    val q = writer.option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally if (q.isActive) q.stop()
   }
 
   /** Durable sink: drain all currently-available input into a parquet
@@ -675,68 +687,107 @@ object StreamingOps {
     * picks up only new files — the production batch-drain shape
     * (Trigger.AvailableNow) for incremental ingestion pipelines. Append
     * mode: aggregations must be watermarked so only closed state emits. */
-  def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = df.writeStream.format("parquet")
+  def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): Unit =
+    drain(df.writeStream.format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
+      .outputMode(OutputMode.Append()), checkpointDir)
+
+  /** Drive a gate or sink: drain all currently-available input of
+    * `stream` through foreachBatch, handing each microbatch and its
+    * batchId to `step` — one of the `apply*Batch` functions below, e.g.
+    * `runGate(stream, ckpt)(applyDriftBatch(_, _, "v", mn, w, bins, dir))`.
+    * The checkpoint carries source offsets, so a second drain on the
+    * same checkpoint sees only new input; a batch foreachBatch replays
+    * after a crash is absorbed by the step's own commit (every versioned
+    * step skips a batchId its marker already holds). */
+  def runGate(stream: DataFrame, checkpointDir: String)(
+      step: (DataFrame, Long) => Unit): Unit =
+    drain(stream.writeStream.foreachBatch(step), checkpointDir)
+
+  // --- the gate family's exactly-once commit ----------------------------
+
+  /** The ONE exactly-once commit of every versioned gate and sink.
+    * foreachBatch can REPLAY a batch after a crash, so each application
+    * writes a fresh versioned directory `v<batchId>` and flips the
+    * `_VERSION` marker LAST: reads the marker, skips a replayed
+    * `batchId <= current`, runs `step(current)` (`-1` before the first
+    * commit) — which performs EVERY write of the batch, including all of
+    * [[concurrently]]'s parallel sinks, before it returns — and only then
+    * flips the marker. A step that throws leaves the marker at the prior
+    * version: its partial `v<batchId>` is invisible to readers
+    * ([[listSnapshotVersions]] excludes it) and the replay of the same
+    * batchId overwrites it. On a real deployment the versioned-dir +
+    * marker pair is the poor man's transactional commit; a lakehouse
+    * table format or an object-store committer would replace exactly
+    * this seam. */
+  private def commitBatch(dir: String, batchId: Long)(step: Long => Unit): Unit = {
+    val current = StateCommit.readVersion(dir)
+    if (batchId > current) {
+      step(current)
+      StateCommit.flipVersion(dir, batchId)
+    }
   }
 
-  // --- streaming upsert sink (foreachBatch -> keyed snapshot) ----------
+  /** [[commitBatch]] for SELF-CONTAINED state: `fold` gets the committed
+    * `v<current>` (None before the first commit) and returns the full
+    * new state, written to `v<batchId>` — so any single committed
+    * version serves alone and [[vacuumVersions]] may drop older ones. */
+  private def foldState(spark: org.apache.spark.sql.SparkSession, dir: String,
+      batchId: Long)(fold: Option[DataFrame] => DataFrame): Unit =
+    commitBatch(dir, batchId) { current =>
+      val prior =
+        if (current >= 0L) Some(spark.read.parquet(s"$dir/v$current")) else None
+      fold(prior).write.mode("overwrite").parquet(s"$dir/v$batchId")
+    }
 
-  /** Streaming UPSERT sink: maintains a keyed snapshot table from a
-    * change stream via foreachBatch + [[graft.etl.Merge.upsert]] — the
-    * streaming-to-serving-table path (CDC stream in, queryable current
-    * state out).
+  /** The count-monoid fold: the batch's `delta` counts union the prior
+    * state and re-sum `measure` per `keys` — arrival order and batch
+    * boundaries are irrelevant, so a drained gate equals the one-shot
+    * recompute. */
+  private def addCounts(delta: DataFrame, prior: Option[DataFrame],
+      keys: Seq[String], measure: String): DataFrame =
+    prior.fold(delta)(delta.unionByName(_))
+      .groupBy(keys.map(col): _*).agg(sum(measure).as(measure))
+
+  /** The committed version of a versioned-state directory, failing loud
+    * (`no committed <what> under <dir>`) before the first commit. */
+  private def readCommitted(spark: org.apache.spark.sql.SparkSession,
+      dir: String, what: String): DataFrame = {
+    val v = StateCommit.requireVersion(dir, what)
+    spark.read.parquet(s"$dir/v$v")
+  }
+
+  // --- streaming upsert sink (keyed snapshot) ---------------------------
+
+  /** Streaming UPSERT: maintains a keyed snapshot table from a change
+    * stream via foreachBatch ([[runGate]]) + [[graft.etl.Merge.upsert]]
+    * — the streaming-to-serving-table path (CDC stream in, queryable
+    * current state out). Public for direct testing and for batch
+    * backfills that share the streaming sink's snapshot.
     *
-    * Exactly-once: foreachBatch can REPLAY a batch after a crash, so
-    * each application writes a fresh versioned directory `v<batchId>`
-    * and flips a `_VERSION` marker last; a replayed batchId ≤ the
-    * marker is skipped ([[applyUpsertBatch]] is idempotent). Within a
-    * batch, duplicate keys collapse last-wins by `orderCol` (ties by
+    * Exactly-once: each application writes a fresh versioned directory
+    * `v<batchId>` and flips a `_VERSION` marker last; a replayed batchId
+    * ≤ the marker is skipped (this step is idempotent). Within a batch,
+    * duplicate keys collapse last-wins by `orderCol` (ties by
     * lexicographic row struct — deterministic), satisfying upsert's
     * unique-key contract. On a real deployment the versioned-dir +
     * marker pair is the poor man's transactional commit; a lakehouse
     * table format would replace exactly this seam. */
-  def upsertSink(stream: DataFrame, keys: Seq[String], orderCol: String,
-      snapshotDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyUpsertBatch(batch, batchId, keys, orderCol, snapshotDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent upsert application. Public for direct testing and
-    * for batch backfills that share the streaming sink's snapshot. */
   def applyUpsertBatch(batch: DataFrame, batchId: Long, keys: Seq[String],
-      orderCol: String, snapshotDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(snapshotDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val others = batch.columns.filterNot(keys.contains).toSeq
-    require(others.contains(orderCol), s"orderCol '$orderCol' must be a non-key column")
-    // last-wins per key: lexicographic max over (orderCol, remaining cols)
-    val packed = batch.groupBy(keys.map(col): _*)
-      .agg(max(struct((orderCol +: others.filterNot(_ == orderCol)).map(col): _*)).as("__r"))
-    val deduped = packed.select(
-      keys.map(col) ++ others.map(c => col(s"__r.$c").as(c)): _*)
-      .select(batch.columns.map(col).toIndexedSeq: _*)
-    val merged = if (current >= 0L)
-      graft.etl.Merge.upsert(
-        spark.read.parquet(s"$snapshotDir/v$current"), deduped, keys)
-    else deduped
-    merged.write.mode("overwrite").parquet(s"$snapshotDir/v$batchId")
-    StateCommit.flipVersion(snapshotDir, batchId)
-  }
+      orderCol: String, snapshotDir: String): Unit =
+    foldState(batch.sparkSession, snapshotDir, batchId) { prior =>
+      val others = batch.columns.filterNot(keys.contains).toSeq
+      require(others.contains(orderCol), s"orderCol '$orderCol' must be a non-key column")
+      // last-wins per key: lexicographic max over (orderCol, remaining cols)
+      val packed = batch.groupBy(keys.map(col): _*)
+        .agg(max(struct((orderCol +: others.filterNot(_ == orderCol)).map(col): _*)).as("__r"))
+      val deduped = packed.select(
+        keys.map(col) ++ others.map(c => col(s"__r.$c").as(c)): _*)
+        .select(batch.columns.map(col).toIndexedSeq: _*)
+      prior.fold(deduped)(graft.etl.Merge.upsert(_, deduped, keys))
+    }
 
-  // --- streaming drift gate (foreachBatch -> persisted histogram state) --
+  // --- streaming drift gate (persisted histogram state) -----------------
 
   /** Streaming feature-drift gate — drift-on-arrival, composing the
     * batch PSI family (graft.ops.DataQuality) with persisted mergeable
@@ -750,54 +801,29 @@ object StreamingOps {
     *
     * Exactly-once: foreachBatch can replay a batch after a crash, so
     * each application writes a fresh versioned state directory and
-    * flips a `_VERSION` marker last (the [[upsertSink]] commit shape);
-    * replayed batchIds ≤ the marker are skipped, so the gate's counts
-    * are EXACT — the drained PSI hash-matches the batch recompute, the
-    * driver row's oracle. State is bins-sized forever; per-batch cost
-    * is one scan of the batch plus a bins-sized merge. */
-  def driftGate(stream: DataFrame, valueCol: String, mn: Double,
-      width: Double, bins: Int, stateDir: String,
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDriftBatch(batch, batchId, valueCol, mn, width, bins, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent histogram-state merge. Public for direct testing
-    * and for batch backfills sharing the gate's state. */
+    * flips a `_VERSION` marker last (the [[applyUpsertBatch]] commit
+    * shape); replayed batchIds ≤ the marker are skipped, so the gate's
+    * counts are EXACT — the drained PSI hash-matches the batch
+    * recompute, the driver row's oracle. State is bins-sized forever;
+    * per-batch cost is one scan of the batch plus a bins-sized merge. */
   def applyDriftBatch(batch: DataFrame, batchId: Long, valueCol: String,
-      mn: Double, width: Double, bins: Int, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val hist = graft.ops.DataQuality.histogramState(batch, valueCol, mn, width, bins)
-    val merged = (if (current >= 0L)
-      hist.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else hist)
-      .groupBy("bin").agg(sum("n").as("n"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      mn: Double, width: Double, bins: Int, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.DataQuality.histogramState(batch, valueCol, mn, width, bins),
+      _, Seq("bin"), "n"))
 
   /** PSI of the gate's committed state against the fixed reference
     * histogram — reads ONLY bins-sized summaries (stored stream state +
     * the reference sketch), never raw rows. */
   def driftGateResult(spark: org.apache.spark.sql.SparkSession,
-      refState: DataFrame, stateDir: String, bins: Int): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "drift state")
+      refState: DataFrame, stateDir: String, bins: Int): DataFrame =
     graft.ops.DataQuality.psiFromState(refState,
-      spark.read.parquet(s"$stateDir/v$v"), bins)
-  }
+      readCommitted(spark, stateDir, "drift state"), bins)
 
-  // --- streaming association gate (foreachBatch -> contingency state) ---
+  // --- streaming association gate (contingency state) -------------------
 
   /** Streaming categorical-association monitor — Cramér's V on
-    * arrival, the [[driftGate]] shape over contingency cells: each
+    * arrival, the [[applyDriftBatch]] shape over contingency cells: each
     * microbatch folds its (a, b) level-pair counts into the stored
     * contingency state (a pure count monoid — batch boundaries and
     * arrival order are irrelevant), and the association of everything
@@ -806,98 +832,48 @@ object StreamingOps {
     * never raw rows. Same versioned-dir + marker exactly-once commit
     * as the drift gate; [[vacuumVersions]] bounds retained versions.
     * The use: watch a feature↔label association drift toward leakage
-    * (or a redundant feature pair appear) while the data streams in. */
-  def associationGate(stream: DataFrame, aCol: String, bCol: String,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAssociationBatch(batch, batchId, aCol, bCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent contingency-cell merge (public for direct testing
-    * and batch backfills sharing the gate's state). The same NULL
-    * sentinel as `DataQuality.cramersV`, so the gate's level space is
-    * identical to the batch audit's. */
+    * (or a redundant feature pair appear) while the data streams in.
+    * The same NULL sentinel as `DataQuality.cramersV`, so the gate's
+    * level space is identical to the batch audit's. */
   def applyAssociationBatch(batch: DataFrame, batchId: Long,
-      aCol: String, bCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = batch.select(
-        coalesce(col(aCol).cast("string"), lit("<NULL>")).as("a"),
-        coalesce(col(bCol).cast("string"), lit("<NULL>")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-    val merged = (if (current >= 0L)
-      cells.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else cells)
-      .groupBy("a", "b").agg(sum("n_ab").as("n_ab"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      aCol: String, bCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      batch.select(
+          coalesce(col(aCol).cast("string"), lit("<NULL>")).as("a"),
+          coalesce(col(bCol).cast("string"), lit("<NULL>")).as("b"))
+        .groupBy("a", "b").agg(count(lit(1)).as("n_ab")),
+      _, Seq("a", "b"), "n_ab"))
 
   /** Cramér's V of the gate's committed contingency state — reads ONLY
     * the stored cell counts. */
   def associationGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "association state")
+      stateDir: String): DataFrame =
     graft.ops.DataQuality.cramersVFromCells(
-      spark.read.parquet(s"$stateDir/v$v"))
-  }
+      readCommitted(spark, stateDir, "association state"))
 
-  // --- streaming t-closeness gate (foreachBatch -> cell-count state) ---
+  // --- streaming t-closeness gate (cell-count state) --------------------
 
   /** Streaming t-closeness — the release audit on arrival: each
     * microbatch's quasi × sensitive cell counts (a pure count monoid,
     * `DataQuality.tClosenessCellState`) fold onto the stored state with
     * the versioned-dir + marker commit, so the drained gate recomputes
     * EXACTLY the one-shot audit from cell-count rows only. State is
-    * audit-cardinality-sized; the associationGate shape with a
+    * audit-cardinality-sized; the [[applyAssociationBatch]] shape with a
     * multi-column key. */
-  def tClosenessGate(stream: DataFrame, quasiIds: Seq[String],
-      sensitive: String, stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTClosenessBatch(batch, batchId, quasiIds, sensitive, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent cell-count merge (public for direct testing and
-    * batch backfills sharing the gate's state). */
   def applyTClosenessBatch(batch: DataFrame, batchId: Long,
-      quasiIds: Seq[String], sensitive: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = graft.ops.DataQuality.tClosenessCellState(
-      batch, quasiIds, sensitive)
-    val merged = (if (current >= 0L)
-      cells.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else cells)
-      .groupBy((quasiIds :+ "__sens").map(col): _*)
-      .agg(sum("n_gc").as("n_gc"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      quasiIds: Seq[String], sensitive: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.DataQuality.tClosenessCellState(batch, quasiIds, sensitive),
+      _, quasiIds :+ "__sens", "n_gc"))
 
   /** t-closeness audit of the gate's committed cell state — reads ONLY
     * the stored counts. */
   def tClosenessGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, quasiIds: Seq[String], tNano: Long): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "t-closeness state")
+      stateDir: String, quasiIds: Seq[String], tNano: Long): DataFrame =
     graft.ops.DataQuality.tClosenessFromCells(
-      spark.read.parquet(s"$stateDir/v$v"), quasiIds, tNano)
-  }
+      readCommitted(spark, stateDir, "t-closeness state"), quasiIds, tNano)
 
-  // --- streaming TWAP gate (foreachBatch -> per-key hold state) ---
+  // --- streaming TWAP gate (per-key hold state) -------------------------
 
   /** Streaming time-weighted average — TWAP on arrival: each
     * microbatch's per-key slice state (running numerator/duration plus
@@ -911,46 +887,22 @@ object StreamingOps {
     * so far via `TimeSeries.twapFromState` — the same division code
     * path as the batch operator, so a drained replay is bit-identical
     * to the one-shot TWAP. */
-  def twapGate(stream: DataFrame, keyCol: String, tsCol: String,
-      idCol: String, valCol: String, stateDir: String,
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyTwapBatch(batch, batchId, keyCol, tsCol, idCol, valCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent TWAP state fold (public for direct testing and
-    * batch backfills sharing the gate's state). */
   def applyTwapBatch(batch: DataFrame, batchId: Long, keyCol: String,
       tsCol: String, idCol: String, valCol: String,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val slice = graft.ops.TimeSeries.twapState(batch, keyCol, tsCol,
-      idCol, valCol)
-    val merged = if (current >= 0L)
-      graft.ops.TimeSeries.mergeTwapStates(
-        spark.read.parquet(s"$stateDir/v$current"), slice)
-    else slice
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId) { prior =>
+      val slice = graft.ops.TimeSeries.twapState(batch, keyCol, tsCol,
+        idCol, valCol)
+      prior.fold(slice)(graft.ops.TimeSeries.mergeTwapStates(_, slice))
+    }
 
   /** TWAP of the gate's committed per-key state — `twapFromState` over
     * the stored rows only. */
   def twapGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "twap state")
-    graft.ops.TimeSeries.twapFromState(spark.read.parquet(s"$stateDir/v$v"))
-  }
+      stateDir: String): DataFrame =
+    graft.ops.TimeSeries.twapFromState(readCommitted(spark, stateDir, "twap state"))
 
-  // --- streaming coverage gate (foreachBatch -> per-key island state) ---
+  // --- streaming coverage gate (per-key island state) -------------------
 
   /** Streaming interval-union coverage — uptime/SLA on arrival: each
     * microbatch's events (uniform `lenSec` holds) fold into one state
@@ -966,73 +918,51 @@ object StreamingOps {
     * coverage of everything seen so far — bit-identical to the batch
     * `Events.coverage` over the drained replay, which is the driver
     * row's oracle. */
-  def coverageGate(stream: DataFrame, keyCol: String, lenSec: Long,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCoverageBatch(batch, batchId, keyCol, lenSec, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent island-state fold (public for direct testing and
-    * batch backfills sharing the gate's state). */
   def applyCoverageBatch(batch: DataFrame, batchId: Long, keyCol: String,
       lenSec: Long, stateDir: String): Unit = {
     require(lenSec > 0, s"lenSec must be positive, got $lenSec")
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val s = graft.ext.Events.tsSec(batch)
-    val base = batch.select(col(keyCol).as("key"), s.as("st"),
-      (s + lenSec).as("en"), lit(1L).as("cnt"))
-    val prior = if (current >= 0L)
-      Some(spark.read.parquet(s"$stateDir/v$current"))
-    else None
-    val carry = prior.map(_.select(col("key"), col("last_st").as("st"),
-      col("last_en").as("en"), lit(0L).as("cnt")))
-    val sweep = graft.ext.Events.islandStats(
-      carry.fold(base)(base.unionByName(_)))
-    val merged = prior match {
-      case None => sweep
-      case Some(st) =>
-        val p = st.select(col("key"), col("n_events").as("p_n"),
-          col("n_islands").as("p_ni"), col("covered_sec").as("p_cov"),
-          col("first_st").as("p_first"),
-          (col("last_en") - col("last_st")).as("p_last_ext"))
-        // every state key re-enters the sweep via its carry row, so
-        // the join is left from the sweep side; closed-island totals
-        // add, the old OPEN island's extent is replaced by the sweep's
-        sweep.join(p, Seq("key"), "left")
-          .select(col("key"),
-            (col("n_events") + coalesce(col("p_n"), lit(0L))).as("n_events"),
-            (col("n_islands") + coalesce(col("p_ni") - 1L, lit(0L)))
-              .as("n_islands"),
-            (col("covered_sec") +
-              coalesce(col("p_cov") - col("p_last_ext"), lit(0L)))
-              .as("covered_sec"),
-            coalesce(col("p_first"), col("first_st")).as("first_st"),
-            col("last_st"), col("last_en"))
+    foldState(batch.sparkSession, stateDir, batchId) { prior =>
+      val s = graft.ext.Events.tsSec(batch)
+      val base = batch.select(col(keyCol).as("key"), s.as("st"),
+        (s + lenSec).as("en"), lit(1L).as("cnt"))
+      val carry = prior.map(_.select(col("key"), col("last_st").as("st"),
+        col("last_en").as("en"), lit(0L).as("cnt")))
+      val sweep = graft.ext.Events.islandStats(
+        carry.fold(base)(base.unionByName(_)))
+      prior match {
+        case None => sweep
+        case Some(st) =>
+          val p = st.select(col("key"), col("n_events").as("p_n"),
+            col("n_islands").as("p_ni"), col("covered_sec").as("p_cov"),
+            col("first_st").as("p_first"),
+            (col("last_en") - col("last_st")).as("p_last_ext"))
+          // every state key re-enters the sweep via its carry row, so
+          // the join is left from the sweep side; closed-island totals
+          // add, the old OPEN island's extent is replaced by the sweep's
+          sweep.join(p, Seq("key"), "left")
+            .select(col("key"),
+              (col("n_events") + coalesce(col("p_n"), lit(0L))).as("n_events"),
+              (col("n_islands") + coalesce(col("p_ni") - 1L, lit(0L)))
+                .as("n_islands"),
+              (col("covered_sec") +
+                coalesce(col("p_cov") - col("p_last_ext"), lit(0L)))
+                .as("covered_sec"),
+              coalesce(col("p_first"), col("first_st")).as("first_st"),
+              col("last_st"), col("last_en"))
+      }
     }
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
   }
 
   /** Coverage report off the gate's committed per-key island state. */
   def coverageGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "coverage state")
-    graft.ext.Events.coverageFromStats(spark.read.parquet(s"$stateDir/v$v"))
-  }
+      stateDir: String): DataFrame =
+    graft.ext.Events.coverageFromStats(readCommitted(spark, stateDir, "coverage state"))
 
-  // --- streaming generation-eval gate (foreachBatch -> corpus edit sums) ---
+  // --- streaming generation-eval gate (corpus edit sums) ----------------
 
   /** Streaming corpus-CER gate — transcript-quality-on-arrival, the
-    * [[driftGate]] shape over edit-count sums: candidate texts arrive
-    * as a stream, join their static references per microbatch
+    * [[applyDriftBatch]] shape over edit-count sums: candidate texts
+    * arrive as a stream, join their static references per microbatch
     * ([[graft.ext.TextEval.cer]] — builtin char-grain levenshtein on
     * the normalized stream), and the per-pair edit counts fold into a
     * ONE-ROW sum state (pair count, total edits, total reference
@@ -1043,82 +973,63 @@ object StreamingOps {
     * state is three longs, never rows. The use: watch an
     * ASR/generation pipeline's corpus error rate while outputs stream
     * in, alarm on an exact-integer micro threshold. */
-  def cerGate(stream: DataFrame, refStatic: DataFrame, idCol: String,
-      textCol: String, stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCerBatch(batch, batchId, refStatic, idCol, textCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent edit-sum state fold (public for direct testing and
-    * for batch backfills sharing the gate's state). */
   def applyCerBatch(batch: DataFrame, batchId: Long, refStatic: DataFrame,
       idCol: String, textCol: String, stateDir: String): Unit = {
     val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    // spread the arriving batch (one file per trigger -> one scan task)
-    // across the session's parallelism before the per-row edit-distance
-    // DP: batch-sized shuffle, guide §2.5's unsplittable-input remedy
-    val spread = batch.repartition(
-      spark.sessionState.conf.numShufflePartitions, col(idCol))
-    val sums = graft.ext.TextEval.cer(spread, refStatic, idCol, textCol)
-      .agg(count(lit(1)).as("n_pairs"),
-        coalesce(sum("edits"), lit(0L)).as("edits"),
-        coalesce(sum("ref_chars"), lit(0L)).as("ref_chars"))
-    // the state is THREE longs — control-plane — so the fold is driver
-    // arithmetic over the collected batch sums plus a local one-row
-    // write, not a union + re-aggregation job chain per microbatch
-    // (guide §2.1; every column is an exact integer sum, addition is
-    // the same monoid either way)
-    merged1Row(sums, current, stateDir, batchId)
-    StateCommit.flipVersion(stateDir, batchId)
+    foldState(spark, stateDir, batchId) { prior =>
+      // spread the arriving batch (one file per trigger -> one scan task)
+      // across the session's parallelism before the per-row edit-distance
+      // DP: batch-sized shuffle, guide §2.5's unsplittable-input remedy
+      val spread = batch.repartition(
+        spark.sessionState.conf.numShufflePartitions, col(idCol))
+      val sums = graft.ext.TextEval.cer(spread, refStatic, idCol, textCol)
+        .agg(count(lit(1)).as("n_pairs"),
+          coalesce(sum("edits"), lit(0L)).as("edits"),
+          coalesce(sum("ref_chars"), lit(0L)).as("ref_chars"))
+      // the state is THREE longs — control-plane — so the fold is driver
+      // arithmetic over the collected batch sums plus a local one-row
+      // write, not a union + re-aggregation job chain per microbatch
+      // (guide §2.1; every column is an exact integer sum, addition is
+      // the same monoid either way)
+      add1Row(sums, prior)
+    }
   }
 
   /** Driver-side fold for ONE-ROW all-long gate state: collect the
     * batch's global sums (one action — the only heavy job), add the
-    * stored longs column-wise, write the merged row back as a local
+    * stored longs column-wise, return the merged row as a local
     * relation (single task, zero exchanges). Only for state that is a
     * fixed handful of longs; keyed/histogram states keep their
     * distributed merges. */
-  private def merged1Row(sums: DataFrame, current: Long, stateDir: String,
-      batchId: Long): Unit = {
+  private def add1Row(sums: DataFrame, prior: Option[DataFrame]): DataFrame = {
     val spark = sums.sparkSession
     val cols = sums.columns
     val b = sums.collect()(0)
-    val prev: Array[Long] =
-      if (current >= 0L) {
-        val r = spark.read.parquet(s"$stateDir/v$current")
-          .select(cols.map(col).toIndexedSeq: _*).collect()(0)
+    val prev: Array[Long] = prior match {
+      case Some(st) =>
+        val r = st.select(cols.map(col).toIndexedSeq: _*).collect()(0)
         Array.tabulate(cols.length)(r.getLong)
-      } else Array.fill(cols.length)(0L)
+      case None => Array.fill(cols.length)(0L)
+    }
     val mergedRow = org.apache.spark.sql.Row.fromSeq(
       Array.tabulate(cols.length)(i => b.getLong(i) + prev(i)).toIndexedSeq)
     spark.createDataFrame(java.util.Collections.singletonList(mergedRow),
-        sums.schema)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
+      sums.schema)
   }
 
   /** Corpus CER off the gate's committed sum state — three longs and
     * one exact integer division, never rows. */
   def cerGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "cer state")
-    spark.read.parquet(s"$stateDir/v$v")
+      stateDir: String): DataFrame =
+    readCommitted(spark, stateDir, "cer state")
       .select(col("n_pairs"), col("edits"), col("ref_chars"),
         when(col("ref_chars") > 0L,
           call_function("div", col("edits") * lit(1000000L),
             col("ref_chars"))).as("cer_micro"))
-  }
 
-  // --- streaming corpus-BLEU gate (foreachBatch -> n-gram sum state) ---
+  // --- streaming corpus-BLEU gate (n-gram sum state) --------------------
 
-  /** Streaming corpus-BLEU gate — the [[cerGate]] shape over
+  /** Streaming corpus-BLEU gate — the [[applyCerBatch]] shape over
     * [[graft.ext.TextEval.corpusBleuSums]]' one-row state: candidates
     * stream in, each microbatch restricts the static reference side to
     * ITS arrived pair ids (left-semi join — so the fold never
@@ -1131,53 +1042,35 @@ object StreamingOps {
     * one-shot corpus BLEU bit for bit: the driver row shares
     * `text_bleu`'s oracle. State is 10 longs; versioned-dir + marker
     * exactly-once commit. */
-  def bleuGate(stream: DataFrame, refStatic: DataFrame, idCol: String,
-      textCol: String, stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBleuBatch(batch, batchId, refStatic, idCol, textCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent n-gram-sum state fold (public for direct testing
-    * and batch backfills sharing the gate's state). */
   def applyBleuBatch(batch: DataFrame, batchId: Long, refStatic: DataFrame,
       idCol: String, textCol: String, stateDir: String): Unit = {
     val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    // spread the arriving batch (one file per trigger -> one scan task)
-    // across the session's parallelism before the in-row n-gram build:
-    // batch-sized shuffle, guide §2.5's unsplittable-input remedy
-    val spread = batch.repartition(
-      spark.sessionState.conf.numShufflePartitions, col(idCol))
-    val refBatch = refStatic.join(
-      spread.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
-    val sums = graft.ext.TextEval.corpusBleuSums(spread, refBatch,
-      idCol = idCol, textCol = textCol)
-    // ten-long one-row state: driver-side fold (see merged1Row — kills
-    // the per-batch union + re-aggregation job chain, guide §2.1)
-    merged1Row(sums, current, stateDir, batchId)
-    StateCommit.flipVersion(stateDir, batchId)
+    foldState(spark, stateDir, batchId) { prior =>
+      // spread the arriving batch (one file per trigger -> one scan task)
+      // across the session's parallelism before the in-row n-gram build:
+      // batch-sized shuffle, guide §2.5's unsplittable-input remedy
+      val spread = batch.repartition(
+        spark.sessionState.conf.numShufflePartitions, col(idCol))
+      val refBatch = refStatic.join(
+        spread.select(col(idCol)).distinct(), Seq(idCol), "left_semi")
+      val sums = graft.ext.TextEval.corpusBleuSums(spread, refBatch,
+        idCol = idCol, textCol = textCol)
+      // ten-long one-row state: driver-side fold (see add1Row — kills
+      // the per-batch union + re-aggregation job chain, guide §2.1)
+      add1Row(sums, prior)
+    }
   }
 
   /** Corpus BLEU off the gate's committed sum state — ten longs in,
     * the quantized BLEU arithmetic out, never rows. */
   def bleuGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "bleu state")
-    graft.ext.TextEval.corpusBleuFromSums(
-      spark.read.parquet(s"$stateDir/v$v"))
-  }
+      stateDir: String): DataFrame =
+    graft.ext.TextEval.corpusBleuFromSums(readCommitted(spark, stateDir, "bleu state"))
 
-  // --- streaming anomaly gate (foreachBatch -> persisted cell state) ---
+  // --- streaming anomaly gate (persisted cell state) --------------------
 
   /** Streaming seasonal-anomaly gate — anomaly-on-arrival, the
-    * [[driftGate]] shape over (key, day, hour) cell counts: each
+    * [[applyDriftBatch]] shape over (key, day, hour) cell counts: each
     * microbatch folds its events into stored per-cell counts (the
     * monoid — arrival order and batch boundaries are irrelevant), and
     * the calendar-aware volume test of everything-seen-so-far is
@@ -1188,48 +1081,24 @@ object StreamingOps {
     * (`TimeSeries.seasonalAnomaly` over the full replay), which is the
     * driver row's oracle. State size is the key's active (day × 24)
     * cell grid — summaries, never events. */
-  def anomalyGate(stream: DataFrame, secCol: String, keyCol: String,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAnomalyBatch(batch, batchId, secCol, keyCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent cell-count state merge (public for direct testing
-    * and for batch backfills sharing the gate's state). */
   def applyAnomalyBatch(batch: DataFrame, batchId: Long, secCol: String,
-      keyCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = graft.ops.TimeSeries.hourCells(batch, secCol, keyCol)
-    val merged = (if (current >= 0L)
-      cells.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else cells)
-      .groupBy(keyCol, "day", "hour").agg(sum("n").as("n"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      keyCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.TimeSeries.hourCells(batch, secCol, keyCol),
+      _, Seq(keyCol, "day", "hour"), "n"))
 
   /** The seasonal-anomaly test over the gate's committed cell state —
     * reads ONLY the stored summaries, never raw events. */
   def anomalyGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCol: String,
-      factorNum: Long = 3L, factorDen: Long = 2L): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "anomaly state")
+      factorNum: Long = 3L, factorDen: Long = 2L): DataFrame =
     graft.ops.TimeSeries.seasonalAnomalyFromCells(
-      spark.read.parquet(s"$stateDir/v$v"), keyCol, factorNum, factorDen)
-  }
+      readCommitted(spark, stateDir, "anomaly state"), keyCol, factorNum, factorDen)
 
-  /** CUSUM-on-arrival: the anomalyGate shape over per-(key, day) count
-    * cells — each microbatch folds its `TimeSeries.dayCells` into the
-    * persisted daily state (a count monoid: arrival order and batch
-    * boundaries are irrelevant), and Page's change-point test over
+  /** CUSUM-on-arrival: the [[applyAnomalyBatch]] shape over per-(key,
+    * day) count cells — each microbatch folds its `TimeSeries.dayCells`
+    * into the persisted daily state (a count monoid: arrival order and
+    * batch boundaries are irrelevant), and Page's change-point test over
     * everything-seen-so-far is readable at any moment via
     * [[cusumGateResult]] without touching raw events. Same
     * versioned-dir + marker exactly-once commit as the other gates, so
@@ -1239,44 +1108,20 @@ object StreamingOps {
     * State size is the keys' active day grid — summaries, never
     * events; [[vacuumVersions]] bounds retained versions (only the
     * marker's current version is ever read). */
-  def cusumGate(stream: DataFrame, secCol: String, keyCol: String,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCusumBatch(batch, batchId, secCol, keyCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent daily-cell state merge (public for direct testing
-    * and for batch backfills sharing the gate's state). */
   def applyCusumBatch(batch: DataFrame, batchId: Long, secCol: String,
-      keyCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = graft.ops.TimeSeries.dayCells(batch, secCol, keyCol)
-    val merged = (if (current >= 0L)
-      cells.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else cells)
-      .groupBy(keyCol, "day").agg(sum("n").as("n"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      keyCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.TimeSeries.dayCells(batch, secCol, keyCol),
+      _, Seq(keyCol, "day"), "n"))
 
   /** Page's CUSUM test over the gate's committed daily state — reads
     * ONLY the stored summaries, never raw events. */
   def cusumGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCol: String,
       kNum: Long = 1L, kDen: Long = 4L,
-      hNum: Long = 2L, hDen: Long = 1L): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "cusum state")
+      hNum: Long = 2L, hDen: Long = 1L): DataFrame =
     graft.ops.TimeSeries.cusumFromCells(
-      spark.read.parquet(s"$stateDir/v$v"), keyCol, kNum, kDen, hNum, hDen)
-  }
+      readCommitted(spark, stateDir, "cusum state"), keyCol, kNum, kDen, hNum, hDen)
 
   /** Holt trend smoothing over the CUSUM gate's committed daily state —
     * the shared-state discipline (PSI/JS histogram twin): the gate
@@ -1285,11 +1130,9 @@ object StreamingOps {
     * the same stored summaries, never raw events. */
   def holtGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyCol: String,
-      alphaMicro: Long, betaMicro: Long): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "cusum state")
+      alphaMicro: Long, betaMicro: Long): DataFrame =
     graft.ops.TimeSeries.holtFromCells(
-      spark.read.parquet(s"$stateDir/v$v"), keyCol, alphaMicro, betaMicro)
-  }
+      readCommitted(spark, stateDir, "cusum state"), keyCol, alphaMicro, betaMicro)
 
   /** Quality-filter-on-arrival: the C4/Gopher rule battery
     * (`TextAnalysis.qualityFilters`) applied to each landing microbatch
@@ -1302,42 +1145,20 @@ object StreamingOps {
     * marker exactly-once commit as the other gates;
     * [[vacuumVersions]] bounds retained versions. State is
     * (source × 2)-sized — never documents. */
-  def qualityGate(stream: DataFrame, textCol: String, srcCol: String,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyQualityBatch(batch, batchId, textCol, srcCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent (source, keep)-count state merge. */
   def applyQualityBatch(batch: DataFrame, batchId: Long, textCol: String,
-      srcCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = graft.ext.TextAnalysis.qualityFilters(batch, textCol)
-      .groupBy(col(srcCol), col("keep")).agg(count(lit(1L)).as("n"))
-    val merged = (if (current >= 0L)
-      cells.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else cells)
-      .groupBy(srcCol, "keep").agg(sum("n").as("n"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      srcCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ext.TextAnalysis.qualityFilters(batch, textCol)
+        .groupBy(col(srcCol), col("keep")).agg(count(lit(1L)).as("n")),
+      _, Seq(srcCol, "keep"), "n"))
 
   /** Per-source corpus health off the gate's committed counts — reads
     * ONLY the stored summaries: (source, n_docs, n_keep,
     * keep_rate_micro), the rate the exact half-up divmod. */
   def qualityGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, srcCol: String): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "quality state")
     val dec = "decimal(38,0)"
-    spark.read.parquet(s"$stateDir/v$v")
+    readCommitted(spark, stateDir, "quality state")
       .groupBy(col(srcCol))
       .agg(sum("n").as("n_docs"),
         sum(when(col("keep"), col("n")).otherwise(lit(0L))).as("n_keep"))
@@ -1347,47 +1168,25 @@ object StreamingOps {
           col("n_docs").cast(dec) * 2).cast("long").as("keep_rate_micro"))
   }
 
-  /** Spatial-hotspot-on-arrival: the anomalyGate shape over per-cell
-    * point counts — each microbatch folds its `Geo.cellCounts` into the
-    * persisted cell state via the versioned-dir + marker exactly-once
-    * commit; [[hotspotGateResult]] then runs the hotspot test over the
-    * SUMMARIES only, never raw points. Cell counts are the monoid, so
-    * the drained gate equals a batch recompute over the full stream. */
-  def hotspotGate(stream: DataFrame, latCol: String, lonCol: String,
-      cellMicro: Long, stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyHotspotBatch(batch, batchId, latCol, lonCol, cellMicro, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent cell-count state merge (public for direct testing
-    * and for batch backfills sharing the gate's state). */
+  /** Spatial-hotspot-on-arrival: the [[applyAnomalyBatch]] shape over
+    * per-cell point counts — each microbatch folds its `Geo.cellCounts`
+    * into the persisted cell state via the versioned-dir + marker
+    * exactly-once commit; [[hotspotGateResult]] then runs the hotspot
+    * test over the SUMMARIES only, never raw points. Cell counts are the
+    * monoid, so the drained gate equals a batch recompute over the full
+    * stream. */
   def applyHotspotBatch(batch: DataFrame, batchId: Long, latCol: String,
-      lonCol: String, cellMicro: Long, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val cells = graft.ops.Geo.cellCounts(batch, latCol, lonCol, cellMicro)
-    val merged = if (current >= 0L)
-      graft.ops.Geo.mergeCellCounts(cells,
-        spark.read.parquet(s"$stateDir/v$current"))
-    else cells
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      lonCol: String, cellMicro: Long, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId) { prior =>
+      val cells = graft.ops.Geo.cellCounts(batch, latCol, lonCol, cellMicro)
+      prior.fold(cells)(graft.ops.Geo.mergeCellCounts(cells, _))
+    }
 
   /** The hotspot test over the gate's committed cell state. */
   def hotspotGateResult(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, factorNum: Long = 3L, factorDen: Long = 2L): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "hotspot state")
+      stateDir: String, factorNum: Long = 3L, factorDen: Long = 2L): DataFrame =
     graft.ops.Geo.hotspotFromCells(
-      spark.read.parquet(s"$stateDir/v$v"), factorNum, factorDen)
-  }
+      readCommitted(spark, stateDir, "hotspot state"), factorNum, factorDen)
 
   /** Prequential perplexity gate — LM scoring on arrival off
     * persisted, GROWING bigram-count state: every microbatch of
@@ -1401,112 +1200,107 @@ object StreamingOps {
     * the versioned-dir + marker flip every stored-state gate uses.
     * The first batch has no model and scores nothing. State size is
     * vocabulary-shaped (bigram + unigram counts), never corpus-shaped. */
-  def lmGate(stream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyLmBatch(batch, batchId, stateDir, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent prequential score + state fold (public for direct
-    * testing and batch backfills sharing the gate's state). */
   def applyLmBatch(batch: DataFrame, batchId: Long, stateDir: String,
       outDir: String): Unit = {
     val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    // spread the one-file batch before the per-row tokenize/score work
-    // (guide §2.5's unsplittable-input remedy; batch-sized shuffle)
-    val spread = batch.repartition(
-      spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-    val (dc2, duni) = graft.ext.LangModel.bigramCountState(spread)
-    val (nc2, nuni) = if (current >= 0L)
-      graft.ext.LangModel.mergeBigramCountState(
-        (spark.read.parquet(s"$stateDir/v$current/c2"),
-          spark.read.parquet(s"$stateDir/v$current/uni")),
-        (dc2, duni))
-    else (dc2, duni)
-    // score output + the two state parts are three INDEPENDENT sinks
-    // (scoring reads only the PRIOR state; c2/uni are separate dirs) —
-    // concurrent jobs, not three serial driver round-trips; the marker
-    // flip below still waits for all three
-    val scoreWrite: Seq[() => Unit] = if (current >= 0L) {
-      val c2 = spark.read.parquet(s"$stateDir/v$current/c2")
-      val uni = spark.read.parquet(s"$stateDir/v$current/uni")
-      val (mc2, mc1, mv) = graft.ext.LangModel.modelFromState(c2, uni)
-      val scored = graft.ext.LangModel.scoreBigram(spread, mc2, mc1, mv)
-      Seq(() => scored.write.mode("overwrite").parquet(s"$outDir/b$batchId"))
-    } else Seq.empty
-    concurrently(scoreWrite ++ Seq[() => Unit](
-      () => nc2.write.mode("overwrite").parquet(s"$stateDir/v$batchId/c2"),
-      () => nuni.write.mode("overwrite").parquet(s"$stateDir/v$batchId/uni")): _*)
-    StateCommit.flipVersion(stateDir, batchId)
+    commitBatch(stateDir, batchId) { current =>
+      // spread the one-file batch before the per-row tokenize/score work
+      // (guide §2.5's unsplittable-input remedy; batch-sized shuffle)
+      val spread = batch.repartition(
+        spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      val (dc2, duni) = graft.ext.LangModel.bigramCountState(spread)
+      val (nc2, nuni) = if (current >= 0L)
+        graft.ext.LangModel.mergeBigramCountState(
+          (spark.read.parquet(s"$stateDir/v$current/c2"),
+            spark.read.parquet(s"$stateDir/v$current/uni")),
+          (dc2, duni))
+      else (dc2, duni)
+      // score output + the two state parts are three INDEPENDENT sinks
+      // (scoring reads only the PRIOR state; c2/uni are separate dirs) —
+      // concurrent jobs, not three serial driver round-trips; the marker
+      // flip still waits for all three
+      val scoreWrite: Seq[() => Unit] = if (current >= 0L) {
+        val c2 = spark.read.parquet(s"$stateDir/v$current/c2")
+        val uni = spark.read.parquet(s"$stateDir/v$current/uni")
+        val (mc2, mc1, mv) = graft.ext.LangModel.modelFromState(c2, uni)
+        val scored = graft.ext.LangModel.scoreBigram(spread, mc2, mc1, mv)
+        Seq(() => scored.write.mode("overwrite").parquet(s"$outDir/b$batchId"))
+      } else Seq.empty
+      concurrently(scoreWrite ++ Seq[() => Unit](
+        () => nc2.write.mode("overwrite").parquet(s"$stateDir/v$batchId/c2"),
+        () => nuni.write.mode("overwrite").parquet(s"$stateDir/v$batchId/uni")): _*)
+    }
   }
 
   /** Prequential trained-classifier gate — Naive-Bayes quality scoring
-    * on arrival off persisted, GROWING class-count state (the [[lmGate]]
-    * shape over [[graft.ext.QualityClassifier]]'s model): every
-    * microbatch of documents is scored under the classifier trained on
-    * all PRIOR batches only, then labels itself with the qualityFilters
-    * rule battery (the label bootstrap) and folds its token/doc class
-    * counts — additive monoids — into the versioned state. Exactly-once
-    * on both sides: per-batch score dirs + the marker flip. The first
-    * batch has no model and scores nothing. State is vocabulary-shaped
-    * (token class counts + one doc-prior row), never corpus-shaped. */
-  def classifierGate(stream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String, textCol: String = "text"): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyClassifierBatch(batch, batchId, stateDir, outDir, textCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent prequential score + class-count fold (public for
-    * direct testing and batch backfills sharing the gate's state). */
+    * on arrival off persisted, GROWING class-count state (the
+    * [[applyLmBatch]] shape over [[graft.ext.QualityClassifier]]'s
+    * model): every microbatch of documents is scored under the
+    * classifier trained on all PRIOR batches only, then labels itself
+    * with the qualityFilters rule battery (the label bootstrap) and
+    * folds its token/doc class counts — additive monoids — into the
+    * versioned state. Exactly-once on both sides: per-batch score dirs
+    * + the marker flip. The first batch has no model and scores
+    * nothing. State is vocabulary-shaped (token class counts + one
+    * doc-prior row), never corpus-shaped. */
   def applyClassifierBatch(batch: DataFrame, batchId: Long, stateDir: String,
       outDir: String, textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    // spread the one-file batch before the per-row tokenize/score work
-    // (guide §2.5's unsplittable-input remedy; batch-sized shuffle)
-    val spread = batch.repartition(
-      spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-    // label bootstrap: the rule battery supplies this batch's classes
-    val labeled = graft.ext.TextAnalysis.qualityFilters(spread, textCol)
-      .select(col("doc_id"), col(textCol), col("keep").as("label"))
-    val (tok, doc) = graft.ext.QualityClassifier.train(labeled, textCol = textCol)
-    val (ntok, ndoc) = if (current >= 0L)
-      (graft.ext.QualityClassifier.mergeTokenCountStates(
-        spark.read.parquet(s"$stateDir/v$current/tok"), tok),
-        graft.ext.QualityClassifier.mergeDocCountStates(
-          spark.read.parquet(s"$stateDir/v$current/doc"), doc))
-    else (tok, doc)
-    // score output + the two state parts are three INDEPENDENT sinks
-    // (scoring reads only the PRIOR state; tok/doc are separate dirs) —
-    // concurrent jobs, not three serial driver round-trips; the marker
-    // flip below still waits for all three
-    val scoreWrite: Seq[() => Unit] = if (current >= 0L) {
-      val scored = graft.ext.QualityClassifier.score(spread,
-        spark.read.parquet(s"$stateDir/v$current/tok"),
-        spark.read.parquet(s"$stateDir/v$current/doc"),
-        textCol = textCol)
-      Seq(() => scored.write.mode("overwrite").parquet(s"$outDir/b$batchId"))
-    } else Seq.empty
-    concurrently(scoreWrite ++ Seq[() => Unit](
-      () => ntok.write.mode("overwrite").parquet(s"$stateDir/v$batchId/tok"),
-      () => ndoc.write.mode("overwrite").parquet(s"$stateDir/v$batchId/doc")): _*)
-    StateCommit.flipVersion(stateDir, batchId)
+    commitBatch(stateDir, batchId) { current =>
+      // spread the one-file batch before the per-row tokenize/score work
+      // (guide §2.5's unsplittable-input remedy; batch-sized shuffle)
+      val spread = batch.repartition(
+        spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      // label bootstrap: the rule battery supplies this batch's classes
+      val labeled = graft.ext.TextAnalysis.qualityFilters(spread, textCol)
+        .select(col("doc_id"), col(textCol), col("keep").as("label"))
+      val (tok, doc) = graft.ext.QualityClassifier.train(labeled, textCol = textCol)
+      val (ntok, ndoc) = if (current >= 0L)
+        (graft.ext.QualityClassifier.mergeTokenCountStates(
+          spark.read.parquet(s"$stateDir/v$current/tok"), tok),
+          graft.ext.QualityClassifier.mergeDocCountStates(
+            spark.read.parquet(s"$stateDir/v$current/doc"), doc))
+      else (tok, doc)
+      // score output + the two state parts are three INDEPENDENT sinks
+      // (scoring reads only the PRIOR state; tok/doc are separate dirs) —
+      // concurrent jobs, not three serial driver round-trips; the marker
+      // flip still waits for all three
+      val scoreWrite: Seq[() => Unit] = if (current >= 0L) {
+        val scored = graft.ext.QualityClassifier.score(spread,
+          spark.read.parquet(s"$stateDir/v$current/tok"),
+          spark.read.parquet(s"$stateDir/v$current/doc"),
+          textCol = textCol)
+        Seq(() => scored.write.mode("overwrite").parquet(s"$outDir/b$batchId"))
+      } else Seq.empty
+      concurrently(scoreWrite ++ Seq[() => Unit](
+        () => ntok.write.mode("overwrite").parquet(s"$stateDir/v$batchId/tok"),
+        () => ndoc.write.mode("overwrite").parquet(s"$stateDir/v$batchId/doc")): _*)
+    }
   }
+
+  // --- append-only index gates (dedup, dHash, sentence spans, IVF) ------
+
+  /** [[commitBatch]] for the APPEND-ONLY index gates: the batch's
+    * `delta` rows are persisted FIRST as the immutable `v<batchId>`, then
+    * read back as the check's new-side state — the delta is computed
+    * once per batch, and the check's lineage reads the same files that
+    * will serve every later batch (write-audit for free). `report` gets
+    * that fresh delta plus the committed index of all PRIOR batches (None
+    * before the first commit) and its frame is written to
+    * `outDir/b<batchId>`. Writes ONLY the batch's own delta — O(batch)
+    * bytes, not O(corpus). */
+  private def appendDelta(stateDir: String, outDir: String, batchId: Long,
+      delta: => DataFrame)(report: (DataFrame, Option[DataFrame]) => DataFrame): Unit =
+    commitBatch(stateDir, batchId) { _ =>
+      val indexPaths = dedupIndexPaths(stateDir)
+      val d = delta
+      val spark = d.sparkSession
+      d.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
+      val fresh = spark.read.parquet(s"$stateDir/v$batchId")
+      val prior =
+        if (indexPaths.nonEmpty) Some(spark.read.parquet(indexPaths: _*)) else None
+      report(fresh, prior).write.mode("overwrite").parquet(s"$outDir/b$batchId")
+    }
 
   /** Streaming near-dup gate off the persisted MinHash-LSH index —
     * `Dedup.minhashIncremental` run as an ingest gate: every microbatch
@@ -1530,17 +1324,13 @@ object StreamingOps {
     * writes each signature exactly once plus however many compactions
     * the operator schedules, instead of rewriting the whole index every
     * microbatch. */
-  def dedupGate(stream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String, threshold: Double = 0.8): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDedupBatch(batch, batchId, stateDir, outDir, threshold)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
+  def applyDedupBatch(batch: DataFrame, batchId: Long, stateDir: String,
+      outDir: String, threshold: Double): Unit =
+    appendDelta(stateDir, outDir, batchId, graft.ext.Dedup.lshIndexState(batch)) {
+      case (fresh, Some(index)) =>
+        graft.ext.Dedup.minhashIncrementalFromState(fresh, index, threshold)
+      case (fresh, None) => graft.ext.Dedup.minhashFromState(fresh, threshold)
+    }
 
   /** Compaction floor: versions <= floor live merged in `c{floor}`. */
   private def dedupIndexFloor(stateDir: String): Long =
@@ -1572,31 +1362,7 @@ object StreamingOps {
     spark.read.parquet(paths: _*)
   }
 
-  /** One idempotent check-then-index step (public for direct testing
-    * and batch backfills sharing the gate's index). Writes ONLY the
-    * batch's own delta — O(batch) bytes, not O(corpus). */
-  def applyDedupBatch(batch: DataFrame, batchId: Long, stateDir: String,
-      outDir: String, threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val indexPaths = dedupIndexPaths(stateDir)
-    // the batch delta is persisted FIRST, then read back as the pair
-    // check's new-side state: shingling + signatures run once per
-    // batch, and the check's lineage reads the same files that will
-    // serve every later batch (write-audit for free)
-    graft.ext.Dedup.lshIndexState(batch)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    val newState = spark.read.parquet(s"$stateDir/v$batchId")
-    val pairs = if (indexPaths.nonEmpty)
-      graft.ext.Dedup.minhashIncrementalFromState(newState,
-        spark.read.parquet(indexPaths: _*), threshold)
-    else graft.ext.Dedup.minhashFromState(newState, threshold)
-    pairs.write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
-
-  // --- streaming conformal gate (foreachBatch -> residual-histogram state) ---
+  // --- streaming conformal gate (residual-histogram state) --------------
 
   /** Streaming conformal calibration — intervals that tighten as
     * scored outcomes arrive: each microbatch's absolute-residual
@@ -1605,90 +1371,41 @@ object StreamingOps {
     * marker commit, so intervals served from the drained state are
     * EXACTLY the one-shot split-conformal q̂ over everything seen.
     * State is distinct-residual-cell sized. */
-  def conformalGate(stream: DataFrame, predCol: String, actualCol: String,
-      stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyConformalBatch(batch, batchId, predCol, actualCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent residual-histogram merge (public for direct
-    * testing and batch backfills sharing the gate's state). */
   def applyConformalBatch(batch: DataFrame, batchId: Long,
-      predCol: String, actualCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val hist = graft.ops.Experiment.conformalResidualHistogram(
-      batch, predCol, actualCol)
-    val merged = (if (current >= 0L)
-      hist.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else hist)
-      .groupBy("r").agg(sum("c").as("c"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      predCol: String, actualCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.Experiment.conformalResidualHistogram(batch, predCol, actualCol),
+      _, Seq("r"), "c"))
 
   /** Intervals for a test frame off the gate's committed residual
     * state — the same q̂ code path as the batch face. */
   def conformalGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, test: DataFrame, predCol: String,
-      alphaMicro: Long = 100000L, idCol: String = "id"): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "conformal state")
+      alphaMicro: Long = 100000L, idCol: String = "id"): DataFrame =
     graft.ops.Experiment.conformalFromHistogram(
-      spark.read.parquet(s"$stateDir/v$v"), test, predCol, alphaMicro, idCol)
-  }
+      readCommitted(spark, stateDir, "conformal state"), test, predCol,
+      alphaMicro, idCol)
 
-  /** CQR calibration-on-arrival — [[conformalGate]]'s quantile-band
-    * twin: each microbatch folds its SIGNED conformity-score histogram
-    * max(lo−y, y−hi) (a count monoid,
+  /** CQR calibration-on-arrival — [[applyConformalBatch]]'s
+    * quantile-band twin: each microbatch folds its SIGNED
+    * conformity-score histogram max(lo−y, y−hi) (a count monoid,
     * `Experiment.cqrScoreHistogram`) into the versioned-dir + marker
     * state, so the drained q̂ equals the one-shot CQR quantile
     * exactly. */
-  def cqrGate(stream: DataFrame, loCol: String, hiCol: String,
-      actualCol: String, stateDir: String, checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCqrBatch(batch, batchId, loCol, hiCol, actualCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent CQR score-histogram merge (public for direct
-    * testing and batch backfills sharing the gate's state). */
   def applyCqrBatch(batch: DataFrame, batchId: Long, loCol: String,
-      hiCol: String, actualCol: String, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val hist = graft.ops.Experiment.cqrScoreHistogram(
-      batch, loCol, hiCol, actualCol)
-    val merged = (if (current >= 0L)
-      hist.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else hist)
-      .groupBy("r").agg(sum("c").as("c"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      hiCol: String, actualCol: String, stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.Experiment.cqrScoreHistogram(batch, loCol, hiCol, actualCol),
+      _, Seq("r"), "c"))
 
   /** CQR intervals for a test frame off the gate's committed score
     * state — the same q̂ code path as the batch face. */
   def cqrGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, test: DataFrame, loCol: String, hiCol: String,
-      alphaMicro: Long = 100000L, idCol: String = "id"): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "cqr state")
+      alphaMicro: Long = 100000L, idCol: String = "id"): DataFrame =
     graft.ops.Experiment.cqrFromHistogram(
-      spark.read.parquet(s"$stateDir/v$v"), test, loCol, hiCol,
+      readCommitted(spark, stateDir, "cqr state"), test, loCol, hiCol,
       alphaMicro, idCol)
-  }
 
   /** Streaming nonparametric drift gate — Mann–Whitney ON ARRIVAL:
     * each microbatch folds its micro-value histogram (vq, t) — a count
@@ -1700,33 +1417,11 @@ object StreamingOps {
     * rank-based complement to the KS drift gate: KS sees the worst
     * CDF point, U sees a location shift, with no distributional
     * assumption. */
-  def mwGate(stream: DataFrame, valueCol: String, stateDir: String,
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMwBatch(batch, batchId, valueCol, stateDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent micro-value-histogram merge (public for direct
-    * testing and batch backfills sharing the gate's state). */
   def applyMwBatch(batch: DataFrame, batchId: Long, valueCol: String,
-      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val hist = graft.ops.Experiment.mwMicroHistogram(batch, valueCol)
-    val merged = (if (current >= 0L)
-      hist.unionByName(spark.read.parquet(s"$stateDir/v$current"))
-    else hist)
-      .groupBy("vq").agg(sum("t").as("t"))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      stateDir: String): Unit =
+    foldState(batch.sparkSession, stateDir, batchId)(addCounts(
+      graft.ops.Experiment.mwMicroHistogram(batch, valueCol),
+      _, Seq("vq"), "t"))
 
   /** Mann–Whitney U of REFERENCE (group A) vs the gate's committed
     * live mass (group B) — the same from-state code path as the batch
@@ -1735,14 +1430,13 @@ object StreamingOps {
     * (persist it once; the gate never rescans it). */
   def mwGateResult(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, reference: DataFrame): DataFrame = {
-    val v = StateCommit.requireVersion(stateDir, "mw-gate state")
-    val live = spark.read.parquet(s"$stateDir/v$v")
+    val live = readCommitted(spark, stateDir, "mw-gate state")
     graft.ops.Experiment.mannWhitneyFromState(
       reference.select(col("vq"), col("t").as("ca"), col("t"))
         .unionByName(live.select(col("vq"), lit(0L).as("ca"), col("t"))))
   }
 
-  // --- streaming IVF index-ingest gate (foreachBatch -> postings deltas) ---
+  // --- streaming IVF index-ingest gate (postings deltas) ----------------
 
   /** Streaming ANN index ingest — IVF postings ON ARRIVAL: the coarse
     * quantizer is trained ONCE (`Similarity.ivfCentroidState`, persisted
@@ -1757,32 +1451,14 @@ object StreamingOps {
     * identically to `ivfTopKFromState` over the full corpus — with
     * exhaustive probing, the exact brute-force top-k (how the driver
     * pins this gate to the SQL oracle). */
-  def ivfIngestGate(stream: DataFrame, centroidDir: String, stateDir: String,
-      checkpointDir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfIngestBatch(batch, batchId, centroidDir, stateDir, idCol, vecCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent assign-and-append step (public for direct testing
-    * and batch backfills sharing the gate's index). */
   def applyIvfIngestBatch(batch: DataFrame, batchId: Long,
       centroidDir: String, stateDir: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    graft.ext.Similarity.assignFromCentroidState(batch,
-        spark.read.parquet(centroidDir), idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      vecCol: String = "embedding"): Unit =
+    commitBatch(stateDir, batchId) { _ =>
+      graft.ext.Similarity.assignFromCentroidState(batch,
+          batch.sparkSession.read.parquet(centroidDir), idCol, vecCol)
+        .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
+    }
 
   /** The full committed postings index as one frame (compaction base +
     * committed deltas — one read path shared with the dedup gate, so
@@ -1862,23 +1538,6 @@ object StreamingOps {
     * crash replay overwrites `b{batchId}` with byte-equal content
     * (the test index being immutable makes the step idempotent with no
     * version marker at all). */
-  def decontamGate(stream: DataFrame, testIndexDir: String, outDir: String,
-      checkpointDir: String, n: Int = 8, maxDf: Long = 0L,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDecontamBatch(batch, batchId, testIndexDir, outDir, n, maxDf,
-          idCol, textCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent decontamination check (public for direct testing
-    * and batch backfills sharing the gate's index): the batch against
-    * the stored test index, report to `outDir/b{batchId}`. */
   def applyDecontamBatch(batch: DataFrame, batchId: Long,
       testIndexDir: String, outDir: String, n: Int = 8, maxDf: Long = 0L,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
@@ -1888,8 +1547,8 @@ object StreamingOps {
       .write.mode("overwrite").parquet(s"$outDir/b$batchId")
   }
 
-  /** Streaming image-dedup gate — the [[dedupGate]] design applied to
-    * perceptual hashes: every microbatch of (id, h_hi, h_lo) dHash
+  /** Streaming image-dedup gate — the [[applyDedupBatch]] design applied
+    * to perceptual hashes: every microbatch of (id, h_hi, h_lo) dHash
     * rows is checked against ALL prior batches (new×new + new×old
     * pigeonhole candidates only, `Dedup.dhashPairsIncremental`), emits
     * its exact-Hamming pairs to `outDir/b{batchId}`, and appends its
@@ -1900,38 +1559,15 @@ object StreamingOps {
     * ([[compactDedupIndex]] works unchanged: it unions parquet deltas
     * without caring about their schema), and state is 2×32 bits per
     * image — the cheapest per-item state of any gate here. */
-  def dhashGate(hashStream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String, maxDist: Int = 3): Unit = {
-    val q = hashStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDhashBatch(batch, batchId, stateDir, outDir, maxDist)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent check-then-index step of [[dhashGate]] (public for
-    * direct testing and batch backfills sharing the index). */
   def applyDhashBatch(batch: DataFrame, batchId: Long, stateDir: String,
-      outDir: String, maxDist: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val indexPaths = dedupIndexPaths(stateDir)
-    batch.select("doc_id", "h_hi", "h_lo")
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    val newHashes = spark.read.parquet(s"$stateDir/v$batchId")
-    val pairs = if (indexPaths.nonEmpty)
-      graft.ext.Dedup.dhashPairsIncremental(newHashes,
-        spark.read.parquet(indexPaths: _*), maxDist)
-    else graft.ext.Dedup.dhashPairs(newHashes, maxDist)
-    pairs.write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      outDir: String, maxDist: Int = 3): Unit =
+    appendDelta(stateDir, outDir, batchId, batch.select("doc_id", "h_hi", "h_lo")) {
+      case (fresh, Some(index)) =>
+        graft.ext.Dedup.dhashPairsIncremental(fresh, index, maxDist)
+      case (fresh, None) => graft.ext.Dedup.dhashPairs(fresh, maxDist)
+    }
 
-  /** Streaming C4 sentence-span gate — the [[dedupGate]] design
+  /** Streaming C4 sentence-span gate — the [[applyDedupBatch]] design
     * applied to span hashes: every microbatch of documents splits to
     * its [[graft.ext.Dedup.sentenceSpanState]] rows, appends them as
     * an immutable `v{batchId}` index delta, and reports EACH ARRIVING
@@ -1945,41 +1581,17 @@ object StreamingOps {
     * never document text; the index shares the dedup gate's
     * marker/compaction protocol ([[compactDedupIndex]] unions parquet
     * deltas schema-agnostically). */
-  def sentenceSpanGate(stream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String, n: Int = 3): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySentenceSpanBatch(batch, batchId, stateDir, outDir, n)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent split-then-report step of [[sentenceSpanGate]]
-    * (public for direct testing and batch backfills sharing the
-    * index). Writes ONLY the batch's own delta — O(batch) bytes. */
   def applySentenceSpanBatch(batch: DataFrame, batchId: Long,
-      stateDir: String, outDir: String, n: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val indexPaths = dedupIndexPaths(stateDir)
-    graft.ext.Dedup.sentenceSpanState(batch, n)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    val newState = spark.read.parquet(s"$stateDir/v$batchId")
-    val full = if (indexPaths.nonEmpty)
-      newState.unionByName(spark.read.parquet(indexPaths: _*))
-    else newState
-    graft.ext.Dedup.sentenceSpansAgainstState(newState, full)
-      .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      stateDir: String, outDir: String, n: Int = 3): Unit =
+    appendDelta(stateDir, outDir, batchId,
+        graft.ext.Dedup.sentenceSpanState(batch, n)) { (fresh, index) =>
+      graft.ext.Dedup.sentenceSpansAgainstState(fresh,
+        index.fold(fresh)(fresh.unionByName(_)))
+    }
 
-  /** Streaming C4 span REMOVAL gate — [[sentenceSpanGate]]'s sibling
-    * that rewrites instead of reporting: each microbatch appends its
-    * POSITIONAL span state ([[graft.ext.Dedup.spanPosState]] —
+  /** Streaming C4 span REMOVAL gate — [[applySentenceSpanBatch]]'s
+    * sibling that rewrites instead of reporting: each microbatch appends
+    * its POSITIONAL span state ([[graft.ext.Dedup.spanPosState]] —
     * (id, pos, h), the keep-first rule needs positions) as an
     * immutable delta and emits its own documents' CLEANED text via
     * [[graft.ext.Dedup.removeSpansAgainstState]]. When ingest order
@@ -1987,37 +1599,13 @@ object StreamingOps {
     * the global (id, pos) minimum, so the drained union equals the
     * one-shot [[graft.ext.Dedup.removeDuplicateSpans]] rewrite
     * row-for-row — the gate shares its oracle verbatim. */
-  def spanRemoveGate(stream: DataFrame, stateDir: String, outDir: String,
-      checkpointDir: String, n: Int = 3): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySpanRemoveBatch(batch, batchId, stateDir, outDir, n)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent clean-on-arrival step of [[spanRemoveGate]]
-    * (public for direct testing and batch backfills sharing the
-    * index). Writes ONLY the batch's own delta — O(batch) bytes. */
   def applySpanRemoveBatch(batch: DataFrame, batchId: Long,
-      stateDir: String, outDir: String, n: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val indexPaths = dedupIndexPaths(stateDir)
-    graft.ext.Dedup.spanPosState(batch, n)
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    val newPos = spark.read.parquet(s"$stateDir/v$batchId")
-    val full = if (indexPaths.nonEmpty)
-      newPos.unionByName(spark.read.parquet(indexPaths: _*))
-    else newPos
-    graft.ext.Dedup.removeSpansAgainstState(batch, full, n)
-      .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      stateDir: String, outDir: String, n: Int = 3): Unit =
+    appendDelta(stateDir, outDir, batchId,
+        graft.ext.Dedup.spanPosState(batch, n)) { (fresh, index) =>
+      graft.ext.Dedup.removeSpansAgainstState(batch,
+        index.fold(fresh)(fresh.unionByName(_)), n)
+    }
 
   /** Streaming golden-record maintenance — incremental MDM: each
     * microbatch's keyed `Dedup.survivorshipState` folds into the
@@ -2028,40 +1616,18 @@ object StreamingOps {
     * total-order key, scalars their monoid). State is key-dimension-
     * sized (one row per entity key, one candidate per rule), never
     * corpus-shaped; the per-batch write is the whole snapshot, which
-    * IS the served table — the upsertSink copy-on-write shape, with
-    * [[vacuumVersions]] bounding retained versions. Exactly-once via
-    * the versioned-dir + `_VERSION` marker-flip protocol. */
-  def survivorshipSink(stream: DataFrame, stateDir: String,
-      checkpointDir: String, keyCol: String,
-      rules: Seq[(String, graft.ext.Dedup.SurviveRule)],
-      idCol: String = "doc_id"): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySurvivorshipBatch(batch, batchId, stateDir, keyCol, rules, idCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally if (q.isActive) q.stop()
-  }
-
-  /** One idempotent fold step (public for direct testing and batch
-    * backfills sharing the snapshot). */
+    * IS the served table — the [[applyUpsertBatch]] copy-on-write
+    * shape, with [[vacuumVersions]] bounding retained versions.
+    * Exactly-once via the versioned-dir + `_VERSION` marker-flip
+    * protocol. */
   def applySurvivorshipBatch(batch: DataFrame, batchId: Long,
       stateDir: String, keyCol: String,
       rules: Seq[(String, graft.ext.Dedup.SurviveRule)],
-      idCol: String = "doc_id"): Unit = {
-    val spark = batch.sparkSession
-    val current = StateCommit.readVersion(stateDir)
-    if (batchId <= current) return // replay of an already-committed batch
-    val delta = graft.ext.Dedup.survivorshipState(batch, keyCol, rules, idCol)
-    val merged = if (current >= 0L)
-      graft.ext.Dedup.mergeSurvivorshipState(
-        spark.read.parquet(s"$stateDir/v$current"), delta, keyCol, rules)
-    else delta
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    StateCommit.flipVersion(stateDir, batchId)
-  }
+      idCol: String = "doc_id"): Unit =
+    foldState(batch.sparkSession, stateDir, batchId) { prior =>
+      val delta = graft.ext.Dedup.survivorshipState(batch, keyCol, rules, idCol)
+      prior.fold(delta)(graft.ext.Dedup.mergeSurvivorshipState(_, delta, keyCol, rules))
+    }
 
   /** The golden records served by the sink's current snapshot. */
   def readGoldenRecords(spark: org.apache.spark.sql.SparkSession,
@@ -2069,12 +1635,11 @@ object StreamingOps {
       rules: Seq[(String, graft.ext.Dedup.SurviveRule)]): DataFrame =
     graft.ext.Dedup.goldenFromState(readSnapshot(spark, stateDir), rules)
 
-  /** Read the current committed snapshot maintained by [[upsertSink]]. */
+  /** Read the current committed snapshot maintained by
+    * [[applyUpsertBatch]]. */
   def readSnapshot(spark: org.apache.spark.sql.SparkSession,
-      snapshotDir: String): DataFrame = {
-    val v = StateCommit.requireVersion(snapshotDir, "snapshot")
-    spark.read.parquet(s"$snapshotDir/v$v")
-  }
+      snapshotDir: String): DataFrame =
+    readCommitted(spark, snapshotDir, "snapshot")
 
   /** Committed batch versions present under a snapshot dir (ascending).
     * Versions AFTER the marker are uncommitted leftovers of a crashed
@@ -2088,27 +1653,19 @@ object StreamingOps {
       .filter(_ <= committed).sorted
   }
 
-  /** Retention: delete committed versions older than the newest
-    * `keepLast`, never touching the current version or uncommitted
-    * directories. Time travel shrinks to the retained window; the
-    * serving path (marker → newest version) is unaffected even if this
-    * crashes mid-delete (old versions are only ever read via explicit
-    * time travel). Returns the versions removed. */
-  def vacuumSnapshots(snapshotDir: String, keepLast: Int): Seq[Long] =
-    vacuumVersions(snapshotDir, keepLast)
-
-  /** Shared retention for every SELF-CONTAINED versioned-state
-    * directory — [[upsertSink]] snapshots and the drift / anomaly /
-    * hotspot / LM gate states, all of which write the FULL (summary-
-    * shaped) state to `v{batchId}` each batch, so any single committed
-    * version can serve alone and older versions exist only for time
-    * travel. Deletes committed versions older than the newest
-    * `keepLast` (recursively — the LM state nests `c2`/`uni` under each
-    * version), never the current version or uncommitted directories.
-    * The serving path (marker → newest version) and the next batch's
-    * fold (reads only `v{current}`) are unaffected even if this crashes
-    * mid-delete. NOT for the dedup-gate index, whose `v` directories
-    * are DELTAS that all remain live — bound that one with
+  /** Retention for every SELF-CONTAINED versioned-state directory —
+    * [[applyUpsertBatch]] snapshots and the drift / anomaly / hotspot /
+    * LM gate states, all of which write the FULL (summary-shaped) state
+    * to `v{batchId}` each batch, so any single committed version can
+    * serve alone and older versions exist only for time travel. Deletes
+    * committed versions older than the newest `keepLast` (recursively —
+    * the LM state nests `c2`/`uni` under each version), never the
+    * current version or uncommitted directories. Time travel shrinks to
+    * the retained window; the serving path (marker → newest version)
+    * and the next batch's fold (reads only `v{current}`) are unaffected
+    * even if this crashes mid-delete (old versions are only ever read
+    * via explicit time travel). NOT for the dedup-gate index, whose `v`
+    * directories are DELTAS that all remain live — bound that one with
     * [[compactDedupIndex]] instead. Returns the versions removed. */
   def vacuumVersions(dir: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current version")

@@ -61,7 +61,7 @@ class StateCommitSpec extends SparkTestBase {
     // time travel + retention also resolve through the FS listing
     assert(StreamingOps.readSnapshotAt(spark, dir, 0L)
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
-    assert(StreamingOps.vacuumSnapshots(dir, keepLast = 1) === Seq(0L))
+    assert(StreamingOps.vacuumVersions(dir, keepLast = 1) === Seq(0L))
     assert(StreamingOps.listSnapshotVersions(dir) === Seq(1L))
   }
 

@@ -780,7 +780,7 @@ class StreamingOpsSpec extends SparkTestBase {
       StreamingOps.readSnapshotAt(spark, dir, 5L) // uncommitted
     }
     // retention: keep only the newest committed version
-    assert(StreamingOps.vacuumSnapshots(dir, keepLast = 1) === Seq(0L))
+    assert(StreamingOps.vacuumVersions(dir, keepLast = 1) === Seq(0L))
     assert(StreamingOps.listSnapshotVersions(dir) === Seq(1L))
     assert(StreamingOps.readSnapshot(spark, dir).count() === 2L) // serving unaffected
     intercept[IllegalArgumentException] {
@@ -795,15 +795,75 @@ class StreamingOpsSpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_upsink_c_").toString
     val mem = MemoryStream[(Long, String, Long)]
     mem.addData((1L, "a", 1L), (2L, "b", 1L), (1L, "a2", 2L))
-    StreamingOps.upsertSink(mem.toDF().toDF("k", "s", "seq"),
-      Seq("k"), "seq", dir, ckpt)
+    StreamingOps.runGate(mem.toDF().toDF("k", "s", "seq"), ckpt)(
+      StreamingOps.applyUpsertBatch(_, _, Seq("k"), "seq", dir))
     // second drain with the same checkpoint only sees the new rows
     mem.addData((2L, "b9", 3L), (4L, "d", 1L))
-    StreamingOps.upsertSink(mem.toDF().toDF("k", "s", "seq"),
-      Seq("k"), "seq", dir, ckpt)
+    StreamingOps.runGate(mem.toDF().toDF("k", "s", "seq"), ckpt)(
+      StreamingOps.applyUpsertBatch(_, _, Seq("k"), "seq", dir))
     val snap = StreamingOps.readSnapshot(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(snap === Map(1L -> "a2", 2L -> "b9", 4L -> "d"))
+  }
+
+  test("commit failure: a failed batch keeps the prior version serving; its replay commits") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_upfail_").toString
+    def b(rows: (Long, String, Long)*) = rows.toDF("k", "s", "seq")
+    StreamingOps.applyUpsertBatch(b((1L, "a", 1L), (2L, "b", 1L)), 0L, Seq("k"), "seq", dir)
+    def served() = StreamingOps.readSnapshot(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    // batch 1's write of v1 fails at action time (the UDF throws inside
+    // the write job), after the prior version was read
+    val boom = org.apache.spark.sql.functions.udf { (s: String) =>
+      if (s == "boom") throw new IllegalStateException("injected write failure")
+      s
+    }
+    val bad = b((2L, "b2", 5L), (3L, "boom", 1L))
+      .withColumn("s", boom(org.apache.spark.sql.functions.col("s")))
+    val ex = intercept[Exception] {
+      StreamingOps.applyUpsertBatch(bad, 1L, Seq("k"), "seq", dir)
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected write failure")))
+    assert(StateCommit.readVersion(dir) === 0L)
+    assert(served() === Map(1L -> "a", 2L -> "b"))
+    // a crash between the v1 write and the marker flip leaves rows in v1:
+    // still invisible, the marker alone decides what serves
+    b((9L, "ghost", 1L)).write.mode("append").parquet(s"$dir/v1")
+    assert(StreamingOps.listSnapshotVersions(dir) === Seq(0L))
+    assert(served() === Map(1L -> "a", 2L -> "b"))
+    // the replay of batch 1 commits and replaces the partial directory
+    StreamingOps.applyUpsertBatch(
+      b((2L, "b2", 5L), (3L, "c", 1L)), 1L, Seq("k"), "seq", dir)
+    assert(StateCommit.readVersion(dir) === 1L)
+    assert(served() === Map(1L -> "a", 2L -> "b2", 3L -> "c"))
+    assert(StreamingOps.listSnapshotVersions(dir) === Seq(0L, 1L))
+  }
+
+  test("runGate drains a count gate twice on one checkpoint: every row counted once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_assoc_s_").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_assoc_c_").toString
+    val mem = MemoryStream[(String, String)]
+    val first = Seq(("x", "p"), ("x", "p"), ("y", "q"))
+    val second = Seq(("x", "p"), ("y", "p"))
+    def drain(): Unit = StreamingOps.runGate(mem.toDF().toDF("u", "w"), ckpt)(
+      StreamingOps.applyAssociationBatch(_, _, "u", "w", dir))
+    mem.addData(first: _*)
+    drain()
+    // second drain with the same checkpoint only sees the new rows
+    mem.addData(second: _*)
+    drain()
+    val cells = StreamingOps.readSnapshot(spark, dir)
+      .as[(String, String, Long)].collect().toSet
+    assert(cells === Set(("x", "p", 3L), ("y", "q", 1L), ("y", "p", 1L)))
+    assert(StreamingOps.listSnapshotVersions(dir) === Seq(0L, 1L))
+    // the drained readout equals the one-shot audit over every row
+    assert(StreamingOps.associationGateResult(spark, dir).collect().toSeq ===
+      graft.ops.DataQuality.cramersV((first ++ second).toDF("u", "w"), "u", "w")
+        .collect().toSeq)
   }
 
   test("stream-static enrichment joins each microbatch against the dimension") {
